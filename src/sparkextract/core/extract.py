@@ -111,15 +111,18 @@ def finalize(items: Iterable[Item]) -> list[Span]:
     ordered = sorted(
         items,
         # (rank, src, sub) is unique for well-formed docs; the trailing
-        # (text, media_ref) tie-break makes the result a pure function of
-        # the item MULTISET even for malformed duplicate-offset inputs —
-        # required because the mega-doc path feeds items in shuffle-arrival
-        # order (job.py _finalize_group)
+        # (text, media_ref) tie-break makes the key total, so the result is
+        # a pure function of the item MULTISET even for malformed
+        # duplicate-offset inputs — required because the mega-doc path
+        # feeds items in shuffle-arrival order (job.py _finalize_group).
+        # None sorts after every string, '' included.
         key=lambda it: (
             config.KIND_RANK[it[0]],
             it[3],
             it[4],
+            it[1] is None,
             it[1] or "",
+            it[2] is None,
             it[2] or "",
         ),
     )
@@ -145,25 +148,16 @@ def finalize(items: Iterable[Item]) -> list[Span]:
 def extract_document(spans: Iterable[Mapping] | None) -> list[Span]:
     """Oracle entry point: raw input span array -> ordered output spans.
 
-    Input spans are processed in their source ``offset`` order; a missing
-    or null array yields an empty output. Duplicate offsets (malformed
-    input) tie-break on (kind, text, media_ref) so the output is a pure
-    function of the span *set* — never of the physical list order, which
-    Spark does not guarantee after a mega-doc split/reassemble.
+    A missing or null array yields an empty output; a null ``offset``
+    counts as 0. The input list order never matters: phase 1 is
+    context-free and ``finalize`` sorts on a total key, so the output is a
+    pure function of the span *multiset* — Spark guarantees no physical
+    list order after a mega-doc split/reassemble.
     """
     if spans is None:
         return []
-    ordered_in = sorted(
-        (dict(s) for s in spans),
-        key=lambda s: (
-            s.get("offset") if s.get("offset") is not None else 0,
-            s.get("kind") or "",
-            s.get("text") or "",
-            s.get("media_ref") or "",
-        ),
-    )
     items: list[Item] = []
-    for s in ordered_in:
+    for s in spans:
         off = s.get("offset")
         items.extend(
             extract_input_span(

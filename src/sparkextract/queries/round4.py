@@ -464,6 +464,7 @@ def q94_corpus_clean_pipeline(spark, sf_dir):
 # (that is the point of the resume).
 _Q95_BUCKETS = 8
 _Q95_FAIL_AFTER = 4
+_Q95_REAP_AGE_S = 24 * 3600
 
 _Q95_ORACLE = f"""
 WITH b AS (
@@ -495,15 +496,23 @@ def _q95_root(spark, sf_dir: str) -> str:
     import hashlib
     import shutil
     import tempfile
+    import time
 
     key = hashlib.md5(
         (spark.sparkContext.applicationId + "|" + sf_dir).encode()
     ).hexdigest()[:12]
     root = os.path.join(tempfile.gettempdir(), f"sparkextract_q95_{key}")
     # reap sibling roots left by earlier sessions (each session otherwise
-    # leaks one extraction-output tree in /tmp forever — round-4 ADVICE)
+    # leaks one extraction-output tree in the temp dir forever), but only
+    # those untouched for _Q95_REAP_AGE_S: a younger root may belong to
+    # another live session
+    cutoff = time.time() - _Q95_REAP_AGE_S
     for stale in glob.glob(os.path.join(tempfile.gettempdir(), "sparkextract_q95_*")):
-        if stale != root:
+        try:
+            old = os.path.getmtime(stale) < cutoff
+        except OSError:  # reaped concurrently
+            continue
+        if stale != root and old:
             shutil.rmtree(stale, ignore_errors=True)
     return root
 

@@ -47,6 +47,9 @@ from sparkextract.queries.base import load, md5_bucket_sql, register
 # ---------------------------------------------------------------------
 # q207
 _Q207_BUDGET = 10_000
+# BUDGET * w can pass int64 at scale (w = n_h * sigma_u, sigma_u ~ 1e8),
+# so the product is exact 128-bit: DECIMAL(38,0) in Spark, HUGEINT in
+# DuckDB (whose `//` and `%` on DECIMAL go through DOUBLE)
 
 _Q207_ORACLE = f"""
 WITH st AS (
@@ -70,8 +73,8 @@ wts AS (
 ),
 base AS (
   SELECT lang, n_h, sigma_u, w, w_tot, n_tot,
-         CAST(({_Q207_BUDGET} * w) // w_tot AS BIGINT) AS base_quota,
-         CAST(({_Q207_BUDGET} * w) % w_tot AS BIGINT) AS rem,
+         CAST((CAST({_Q207_BUDGET} AS HUGEINT) * w) // w_tot AS BIGINT) AS base_quota,
+         CAST((CAST({_Q207_BUDGET} AS HUGEINT) * w) % w_tot AS BIGINT) AS rem,
          CAST(({_Q207_BUDGET} * n_h) // n_tot AS BIGINT) AS prop_quota
   FROM wts
 ),
@@ -124,8 +127,10 @@ def q207_neyman_allocation(spark, sf_dir):
         "lang",
         "n_h",
         "sigma_u",
-        F.expr(f"({_Q207_BUDGET} * w) div w_tot").cast("long").alias("base_quota"),
-        (F.lit(_Q207_BUDGET) * F.col("w") % F.col("w_tot")).cast("long").alias("rem"),
+        F.expr(f"(CAST({_Q207_BUDGET} AS DECIMAL(38,0)) * w) div w_tot")
+        .cast("long")
+        .alias("base_quota"),
+        F.expr(f"(CAST({_Q207_BUDGET} AS DECIMAL(38,0)) * w) % w_tot").cast("long").alias("rem"),
         F.expr(f"({_Q207_BUDGET} * n_h) div n_tot").cast("long").alias("prop_quota"),
     )
     seats = base.select(

@@ -2,7 +2,7 @@
 
 Pipeline (north_rule):
     read documents → anti-join checkpoint manifest (J2 resume) →
-    repartition by hash(doc_id) → [small docs] whole-doc ``mapInPandas`` /
+    [small docs] whole-doc ``mapInPandas`` on the scan splits /
     [mega docs] explode → phase-1 ``mapInPandas`` → groupBy(doc_id)
     ``applyInPandas`` finalize → union → write bucketed output + manifest.
 
@@ -14,8 +14,8 @@ Splitting therefore commutes with extraction and the mega path is
 bit-identical to the whole-doc path (tested in test_spark_job.py).
 
 Scale notes:
-- the whole-doc path has ZERO shuffles after the balance repartition —
-  extraction is embarrassingly parallel;
+- the whole-doc path has ZERO shuffles — extraction is embarrassingly
+  parallel;
 - the mega path shuffles only mega-doc items (~0.1% of docs), keyed by
   doc_id, with AQE skew handling on;
 - all Python crossings are Arrow-batched (no per-row Python, input_hint);
@@ -111,7 +111,6 @@ def extract_exploded(
     docs: DataFrame,
     skew_threshold: int = config.MEGA_DOC_SPAN_THRESHOLD,
     parallelism: int | None = None,
-    balance_repartition: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans) -> exploded output spans.
 
@@ -119,13 +118,10 @@ def extract_exploded(
     explode/split/reassemble path; pass ``None``/huge to force the
     whole-doc path (used by the invariance tests).
 
-    ``balance_repartition``: extraction is map-only, so by default it runs
-    directly on the scan splits — repartitioning first would shuffle the
-    ENTIRE document payload once before any work (at 100 TB that doubles
-    cluster I/O for nothing; file splitting via
-    ``spark.sql.files.maxPartitionBytes`` already balances). Set True only
-    when the source layout is known-pathological (e.g. one giant file
-    of an unsplittable format).
+    Extraction is map-only, so the whole-doc path runs directly on the scan
+    splits: repartitioning first would shuffle the entire document payload
+    once before any work, while file splitting via
+    ``spark.sql.files.maxPartitionBytes`` already balances.
     """
     from sparkextract.spark.session import ensure_workers_can_import
 
@@ -140,8 +136,6 @@ def extract_exploded(
         small = docs.filter(n_span <= skew_threshold)
         mega = docs.filter(n_span > skew_threshold)
 
-    if balance_repartition:
-        small = small.repartition(parallelism, "doc_id")
     small_out = small.mapInPandas(_extract_whole_docs, schema=EXPLODED_DDL)
     if mega is None:
         return small_out
@@ -177,12 +171,19 @@ def assemble_spans(exploded: DataFrame) -> DataFrame:
 
     Built-in exprs only: sort_array on struct(offset, ...) sorts by the
     leading offset field, then transform reorders the struct fields to the
-    canonical (kind, text, media_ref, offset) layout."""
+    canonical (kind, text, media_ref, offset) layout. Rows with a null
+    ``kind`` carry no span (``collect_list`` skips the NULL), so a doc
+    whose only row is null-kind folds to an empty span array."""
     return (
         exploded.groupBy("doc_id")
         .agg(
             F.sort_array(
-                F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
+                F.collect_list(
+                    F.when(
+                        F.col("kind").isNotNull(),
+                        F.struct("offset", "kind", "text", "media_ref"),
+                    )
+                )
             ).alias("_s")
         )
         .select(
@@ -209,32 +210,7 @@ def extract_documents(docs: DataFrame, **kwargs) -> DataFrame:
     pass, one shuffle. (An anti-join against the assembled result would
     reference the extraction subtree twice in the same plan, and Spark
     recomputes unshared subtrees — at 100 TB that doubles the job.)
-    ``collect_list`` skips NULL elements, so unmatched docs fold to an
-    empty span array."""
+    Unmatched docs come out of the join with a null ``kind``, which
+    ``assemble_spans`` folds to an empty span array."""
     exploded = extract_exploded(docs, **kwargs)
-    joined = docs.select("doc_id").join(exploded, "doc_id", "left")
-    return (
-        joined.groupBy("doc_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("kind").isNotNull(),
-                        F.struct("offset", "kind", "text", "media_ref"),
-                    )
-                )
-            ).alias("_s")
-        )
-        .select(
-            "doc_id",
-            F.transform(
-                "_s",
-                lambda x: F.struct(
-                    x["kind"].alias("kind"),
-                    x["text"].alias("text"),
-                    x["media_ref"].alias("media_ref"),
-                    x["offset"].alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
+    return assemble_spans(docs.select("doc_id").join(exploded, "doc_id", "left"))

@@ -14,6 +14,11 @@ The resume probe is the reference's SHA-256 skip-if-ingested check
 per-document to per-bucket: a left-anti join against completed buckets
 (J2, SURVEY.md §2.3).
 
+A run commits in one pass: the data write observes per-bucket span and
+table counts, one small collect adds per-bucket doc counts, and the
+manifest rows are built on the driver and appended as local data.
+After the write, that collect is the only job that scans the input.
+
 On a real cluster the same API is backed by an Iceberg manifest table
 (``df.writeTo(...).append()`` is atomic per snapshot); the bucket math
 ``pmod(xxhash64(doc_id), N)`` is identical.
@@ -24,6 +29,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -114,14 +120,9 @@ def run_extraction_job(
     out_bucket = bucket_expr(num_buckets) if bucket_col is None else bucket_col.cast("int")
     exploded = exploded.withColumn("bucket", out_bucket)
 
-    # Per-bucket span/table metrics ride along with the WRITE via
-    # df.observe(): at 100 TB a post-write `spark.read.parquet(out_dir)`
-    # (the previous design) is a second full pass of output I/O just for
-    # counters. One conditional-sum pair per bucket is 2*num_buckets
-    # cheap JVM-side aggregates collected by the write action itself —
-    # no extra job, no re-read, no recomputation of the extraction
-    # subtree. (Grouped aggs aren't expressible in observe(), hence the
-    # per-bucket unrolling; num_buckets is a small fixed constant.)
+    # The data write carries the per-bucket span/table counts through
+    # df.observe(). Grouped aggs aren't expressible there, hence one
+    # count_if pair per bucket, each one SQL string (one py4j call apiece).
     # The CollectMetrics node sits ABOVE the bucket repartition, i.e. in
     # the result/write stage: observed-metric updates from the final
     # stage are deduplicated per successful task, whereas a map-stage
@@ -130,12 +131,9 @@ def run_extraction_job(
     obs = Observation(f"bucket_metrics_{run_id}")
     aggs = []
     for k in range(num_buckets):
-        in_bucket = (F.col("bucket") == k).cast("long")
-        aggs.append(F.sum(in_bucket).alias(f"sc_{k}"))
+        aggs.append(F.expr(f"count_if(bucket = {k}) AS sc_{k}"))
         aggs.append(
-            F.sum(
-                ((F.col("bucket") == k) & (F.col("kind") == config.KIND_TABLE)).cast("long")
-            ).alias(f"tc_{k}")
+            F.expr(f"count_if(bucket = {k} AND kind = '{config.KIND_TABLE}') AS tc_{k}")
         )
 
     out_dir = os.path.join(_data_dir(root), f"epoch={run_id}")
@@ -147,44 +145,27 @@ def run_extraction_job(
         .parquet(out_dir)
     )
 
-    # per-bucket lineage + metrics (north_rule: per-partition lineage and
-    # span-count/table-count metrics). Includes empty-output docs via the
-    # todo side so wholly-filtered buckets still commit.
+    # doc counts come from `todo`, not the output, so buckets whose docs
+    # all extract to nothing still commit
     metrics = obs.get
-    doc_buckets = (
-        todo.select("doc_id", "doc_id_bucket")
-        .groupBy("doc_id_bucket").agg(F.countDistinct("doc_id").alias("doc_count"))
-    )
-    span_stats = spark.createDataFrame(
-        [
-            (k, int(metrics.get(f"sc_{k}") or 0), int(metrics.get(f"tc_{k}") or 0))
-            for k in range(num_buckets)
-        ],
-        "doc_id_bucket int, span_count long, table_count long",
-    )
+    doc_counts = todo.groupBy("doc_id_bucket").agg(F.countDistinct("doc_id")).collect()
     wall_ms = int((time.time() - t0) * 1000)
-    stats = (
-        doc_buckets.join(span_stats, "doc_id_bucket", "left")
-        .na.fill({"span_count": 0, "table_count": 0})
-        .withColumn("job_run_id", F.lit(run_id))
-        .withColumn("status", F.lit("done"))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("committed_at", F.current_timestamp())
-        .select([f.name for f in MANIFEST_SCHEMA.fields])
+    committed_at = datetime.now(timezone.utc)
+    rows = [
+        (run_id, k, "done", n_docs, metrics.get(f"sc_{k}", 0), metrics.get(f"tc_{k}", 0),
+         wall_ms, committed_at)
+        for k, n_docs in sorted(doc_counts)
+        if fail_after_buckets is None or k < fail_after_buckets
+    ]
+    spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
+        _manifest_dir(root)
     )
-    if fail_after_buckets is not None:
-        stats = stats.filter(F.col("doc_id_bucket") < fail_after_buckets)
 
-    stats.coalesce(1).write.mode("append").parquet(_manifest_dir(root))
-
-    committed = stats.agg(
-        F.sum("doc_count"), F.sum("span_count"), F.sum("table_count")
-    ).collect()[0]
     return {
         "run_id": run_id,
-        "docs": int(committed[0] or 0),
-        "spans": int(committed[1] or 0),
-        "tables": int(committed[2] or 0),
+        "docs": sum(r[3] for r in rows),
+        "spans": sum(r[4] for r in rows),
+        "tables": sum(r[5] for r in rows),
         "wall_s": time.time() - t0,
     }
 

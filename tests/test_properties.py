@@ -35,19 +35,18 @@ _text_st = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400
 )
 
-_span_st = st.builds(
-    lambda kind, text, ref, off: {
-        "kind": kind,
-        "text": text if kind != "media" else None,
-        "media_ref": ref if kind == "media" else None,
-        "offset": off,
-    },
-    st.sampled_from(_KINDS),
-    _text_st,
-    st.text(min_size=1, max_size=30),
-    # tiny offset range so duplicate offsets (malformed input) are common —
-    # the order-invariance property must hold even then
-    st.integers(min_value=0, max_value=3),
+# the full nullable input schema, not just the generator's shapes: any
+# field may be null, '' competes with None, unknown kinds take the text
+# fallback, and media spans may carry text (ignored) or no media_ref
+_span_st = st.fixed_dictionaries(
+    {
+        "kind": st.one_of(st.sampled_from(_KINDS), st.none(), st.sampled_from(["", "video"])),
+        "text": st.one_of(st.none(), st.just(""), _text_st),
+        "media_ref": st.one_of(st.none(), st.just(""), st.text(max_size=30)),
+        # tiny offset range so duplicate offsets (malformed input) are
+        # common — the order-invariance property must hold even then
+        "offset": st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+    }
 )
 
 _doc_st = st.lists(_span_st, max_size=8)
@@ -70,7 +69,10 @@ def test_output_spans_well_formed(spans):
         assert s["offset"] == i  # dense 0-based (W1)
         assert s["kind"] in config.VALID_OUTPUT_KINDS
         if s["kind"] == config.KIND_IMAGE:
-            assert s["media_ref"] is not None
+            # media_ref passes through verbatim: null only from a null input ref
+            assert s["media_ref"] is not None or any(
+                x["kind"] == "media" and x["media_ref"] is None for x in spans
+            )
         else:
             assert s["text"] is not None and s["text"] != ""
 
@@ -105,6 +107,13 @@ def test_parsers_total_and_deterministic(junk):
     # must not raise on arbitrary junk, and must be pure
     assert extract_html(junk) == extract_html(junk)
     assert parse_pdf_layout(junk) == parse_pdf_layout(junk)
+
+
+def test_null_and_empty_media_ref_order_invariant():
+    # equal offsets and equal OCR text: only None vs '' tells them apart
+    a = {"kind": "media", "text": None, "media_ref": None, "offset": 0}
+    b = {"kind": "media", "text": None, "media_ref": "", "offset": 0}
+    assert extract_document([a, b]) == extract_document([b, a])
 
 
 def test_duplicate_tables_deduped_first_wins():

@@ -124,3 +124,46 @@ def test_assemble_roundtrip(spark, docs):
         "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"
     )
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, exploded.collect()))
+
+
+def test_manifest_counts_match_output(spark, docs, tmp_path_factory):
+    """Every committed manifest row's counts equal a groupBy over the input
+    and the committed output, a bucket holding only empty-output docs
+    still commits, and the returned totals are the rows' sums."""
+    from sparkextract.schema import DOC_SCHEMA
+    from sparkextract.spark.manifest import read_manifest
+
+    root = str(tmp_path_factory.mktemp("job_counts"))
+    empty = spark.createDataFrame(
+        [
+            ("empty-list", []),
+            ("empty-null", None),
+            ("empty-spans", [("text", None, None, 0), ("html", "  ", None, None)]),
+        ],
+        schema=DOC_SCHEMA,
+    )
+    corpus = docs.unionByName(empty)
+    # empty-output docs get bucket 3 to themselves; the rest spread over 0-2
+    bucket = F.when(F.col("doc_id").startswith("empty-"), F.lit(3)).otherwise(
+        F.pmod(F.xxhash64("doc_id"), F.lit(3))
+    )
+    got = run_extraction_job(spark, corpus, root, run_id="counts", num_buckets=4,
+                             bucket_col=bucket)
+
+    rows = {r["doc_id_bucket"]: r for r in read_manifest(spark, root).collect()}
+    want_docs = dict(corpus.groupBy(bucket.alias("b")).count().collect())
+    out = read_extracted(spark, root).withColumn("b", bucket)
+    want_spans = dict(out.groupBy("b").count().collect())
+    want_tables = dict(out.filter(F.col("kind") == "table").groupBy("b").count().collect())
+
+    assert sorted(rows) == [0, 1, 2, 3]
+    for k, r in rows.items():
+        assert (r["job_run_id"], r["status"]) == ("counts", "done")
+        assert r["doc_count"] == want_docs[k]
+        assert r["span_count"] == want_spans.get(k, 0)
+        assert r["table_count"] == want_tables.get(k, 0)
+    assert (rows[3]["doc_count"], rows[3]["span_count"]) == (3, 0)
+    assert sum(r["table_count"] for r in rows.values()) > 0
+    assert got["docs"] == sum(r["doc_count"] for r in rows.values())
+    assert got["spans"] == sum(r["span_count"] for r in rows.values())
+    assert got["tables"] == sum(r["table_count"] for r in rows.values())
