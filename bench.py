@@ -164,7 +164,8 @@ def _scaling_child(cores: int) -> dict:
     from sparkextract.spark.job import extract_exploded
     from sparkextract.spark.session import get_spark
 
-    os.environ.setdefault("SPARKEXTRACT_DRIVER_MEM", "48g")
+    # the heap perfbench pins: 4g fits a 15 GB machine with room for the workers
+    os.environ.setdefault("SPARKEXTRACT_DRIVER_MEM", "4g")
     spark = get_spark(
         f"bench-scale-{cores}",
         master=f"local[{cores}]",

@@ -65,9 +65,9 @@ def input_token(sf_dir: str) -> str:
 
 
 # (applicationId, input_token, sf_dir, tag)-keyed eager-localCheckpoint
-# memo — the shared form of dedup2's _Q68_SIGS_MEMO / round3's
-# _COMPONENTS_MEMO discipline: an intermediate frame referenced by
-# several subtrees is materialized ONCE per (session, input) instead of
+# memo, the one memo of the query layer: an intermediate frame
+# referenced by several subtrees (q68's signatures, q71/q72's
+# components, ...) is materialized ONCE per (session, input) instead of
 # recomputed per subtree (ReuseExchange does not fire across sibling
 # subtrees under AQE, and lazy checkpoints still recompute lineage on
 # both sides of a self-join — measured 16x slower on q68). The input
@@ -76,7 +76,7 @@ def input_token(sf_dir: str) -> str:
 # entry's localCheckpoint blocks are NOT reclaimable via unpersist();
 # reclamation relies on ContextCleaner GC of the dropped reference, so
 # a returned frame must be fully consumed before ~CAP later memo
-# inserts — at CAP=64 that is never hit by the query surface).
+# inserts — never hit by the query surface).
 _CKPT_MEMO: dict[tuple[str, str, str, str], DataFrame] = {}
 _CKPT_MEMO_CAP = 256  # ~26 tags/sf_dir (round-5 end): covers many sf_dirs
 
@@ -94,6 +94,39 @@ def checkpoint_memo(spark: SparkSession, sf_dir: str, tag: str, build):
             _CKPT_MEMO.pop(next(iter(_CKPT_MEMO)))
         _CKPT_MEMO[key] = df
     return df
+
+
+# sibling session roots untouched this long are reaped; a younger one
+# may belong to another live session
+SESSION_ROOT_REAP_AGE_S = 24 * 3600
+
+
+def session_root(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """Temp-dir root ``sparkextract_<tag>_<key>`` for a query that writes
+    files, keyed by (session, input). Reaps sibling roots of the same tag
+    left by earlier sessions (each would otherwise leak one output tree
+    in the temp dir forever), but only those whose mtime is older than
+    ``SESSION_ROOT_REAP_AGE_S``."""
+    import glob
+    import hashlib
+    import shutil
+    import tempfile
+    import time
+
+    key = hashlib.md5(
+        (spark.sparkContext.applicationId + "|" + sf_dir).encode()
+    ).hexdigest()[:12]
+    prefix = os.path.join(tempfile.gettempdir(), f"sparkextract_{tag}_")
+    root = prefix + key
+    cutoff = time.time() - SESSION_ROOT_REAP_AGE_S
+    for stale in glob.glob(prefix + "*"):
+        try:
+            old = os.path.getmtime(stale) < cutoff
+        except OSError:  # reaped concurrently
+            continue
+        if stale != root and old:
+            shutil.rmtree(stale, ignore_errors=True)
+    return root
 
 
 def dsum(col_sql: str) -> str:

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparkextract.queries.base import load, register
+from sparkextract.queries.base import checkpoint_memo, load, register
 
 _BITS = 16
 
@@ -498,15 +498,6 @@ def _simhash48_col(df):
     return votes.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-# signature-table memo, (applicationId, sf_dir)-keyed like q71's
-# _COMPONENTS_MEMO: repeated q68/panel constructions in one session must
-# not run the build-time checkpoint job again nor accumulate checkpoint
-# blocks (data is immutable per (session, dir) — see round3.py's memo
-# note). FIFO-bounded; eviction unpersists the blocks.
-_Q68_SIGS_MEMO: dict[tuple[str, str], object] = {}
-_Q68_SIGS_MEMO_CAP = 4
-
-
 @register("q68_simhash_near_dup", oracle=_Q68_ORACLE)
 def q68_simhash_near_dup(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -525,17 +516,9 @@ def q68_simhash_near_dup(spark, sf_dir):
     # persisted once, then banded and self-joined. The eager build-time
     # job is the documented cost (dump_plans notes it); the memo keeps
     # it to once per (session, input).
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    sigs = _Q68_SIGS_MEMO.get(memo_key)
-    if sigs is None:
-        sigs = _simhash48_col(docs.unionByName(near)).localCheckpoint()
-        while len(_Q68_SIGS_MEMO) >= _Q68_SIGS_MEMO_CAP:
-            evicted = _Q68_SIGS_MEMO.pop(next(iter(_Q68_SIGS_MEMO)))
-            try:
-                evicted.unpersist()
-            except Exception:
-                pass  # session already stopped; JVM refs are gone anyway
-        _Q68_SIGS_MEMO[memo_key] = sigs
+    sigs = checkpoint_memo(
+        spark, sf_dir, "q68_sigs", lambda: _simhash48_col(docs.unionByName(near))
+    )
     return simhash_banded_pairs(sigs)
 
 

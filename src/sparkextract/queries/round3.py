@@ -239,22 +239,6 @@ FROM (
 """
 
 
-# the propagation loop runs actions eagerly (convergence tests), so when
-# q71 and q72 share one session+input (the panel view unions both) the
-# localCheckpoint()ed fixed point is reused instead of recomputed. The
-# key carries an input-content token (file names/sizes/mtimes), so a
-# caller that rewrites the parquet under sf_dir in-session gets fresh
-# components instead of stale checkpointed labels (round-3 ADVICE item;
-# regression-tested in test_round5.py).
-# FIFO-bounded: entries for stopped sessions would otherwise pin dead
-# DataFrame/JVM-gateway references for the process lifetime (pytest and
-# repeated driver rounds run many sessions in one process); eviction
-# drops the reference and leaves block reclamation to ContextCleaner GC
-# (localCheckpoint blocks are not unpersist()-able).
-_COMPONENTS_MEMO: dict[tuple[str, str, str], object] = {}
-_COMPONENTS_MEMO_CAP = 8
-
-
 def label_propagation(pair_df):
     """(left_id, right_id) dup pairs -> (id, lbl) connected-component
     labels via iterated min-label propagation. Each iteration is ONE
@@ -295,17 +279,17 @@ def label_propagation(pair_df):
 
 
 def _dup_components(spark, sf_dir):
-    from sparkextract.queries.base import input_token
+    # the propagation loop runs actions eagerly (convergence tests), so
+    # when q71 and q72 share one session+input (the panel view unions
+    # both) the fixed point is memoized instead of recomputed; the memo
+    # key's input token makes an in-session parquet rewrite recompute
+    # (regression-tested in test_round5.py)
+    from sparkextract.queries.base import checkpoint_memo
 
-    memo_key = (spark.sparkContext.applicationId, input_token(sf_dir), sf_dir)
-    cached = _COMPONENTS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    labels = label_propagation(q53_banded_lsh_near_dup(spark, sf_dir))
-    while len(_COMPONENTS_MEMO) >= _COMPONENTS_MEMO_CAP:
-        _COMPONENTS_MEMO.pop(next(iter(_COMPONENTS_MEMO)))
-    _COMPONENTS_MEMO[memo_key] = labels
-    return labels
+    return checkpoint_memo(
+        spark, sf_dir, "q71_components",
+        lambda: label_propagation(q53_banded_lsh_near_dup(spark, sf_dir)),
+    )
 
 
 @register("q71_dup_components", oracle=_Q71_ORACLE)

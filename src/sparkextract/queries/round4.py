@@ -15,7 +15,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sparkextract.queries.base import load, md5_bucket, md5_bucket_sql, register
+from sparkextract.queries.base import load, md5_bucket, md5_bucket_sql, register, session_root
 
 # --------------------------------------------------------------------------
 # q91: N-GRAM EVAL-SET DECONTAMINATION — the benchmark-contamination
@@ -464,7 +464,6 @@ def q94_corpus_clean_pipeline(spark, sf_dir):
 # (that is the point of the resume).
 _Q95_BUCKETS = 8
 _Q95_FAIL_AFTER = 4
-_Q95_REAP_AGE_S = 24 * 3600
 
 _Q95_ORACLE = f"""
 WITH b AS (
@@ -491,32 +490,6 @@ GROUP BY doc_id_bucket
 _Q95_DONE: set[tuple[str, str]] = set()
 
 
-def _q95_root(spark, sf_dir: str) -> str:
-    import glob
-    import hashlib
-    import shutil
-    import tempfile
-    import time
-
-    key = hashlib.md5(
-        (spark.sparkContext.applicationId + "|" + sf_dir).encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"sparkextract_q95_{key}")
-    # reap sibling roots left by earlier sessions (each session otherwise
-    # leaks one extraction-output tree in the temp dir forever), but only
-    # those untouched for _Q95_REAP_AGE_S: a younger root may belong to
-    # another live session
-    cutoff = time.time() - _Q95_REAP_AGE_S
-    for stale in glob.glob(os.path.join(tempfile.gettempdir(), "sparkextract_q95_*")):
-        try:
-            old = os.path.getmtime(stale) < cutoff
-        except OSError:  # reaped concurrently
-            continue
-        if stale != root and old:
-            shutil.rmtree(stale, ignore_errors=True)
-    return root
-
-
 @register("q95_manifest_resume_state", oracle=_Q95_ORACLE)
 def q95_manifest_resume_state(spark, sf_dir):
     import shutil
@@ -524,7 +497,7 @@ def q95_manifest_resume_state(spark, sf_dir):
     from sparkextract.queries.extraction import interleaved_docs
     from sparkextract.spark.manifest import read_manifest, run_extraction_job
 
-    root = _q95_root(spark, sf_dir)
+    root = session_root(spark, sf_dir, "q95")
     memo_key = (spark.sparkContext.applicationId, sf_dir)
     if memo_key not in _Q95_DONE:
         shutil.rmtree(root, ignore_errors=True)

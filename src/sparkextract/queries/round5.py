@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from sparkextract.queries.base import load, register
+from sparkextract.queries.base import load, register, session_root
 from sparkextract.queries.extraction import ocr_sql
 
 # --------------------------------------------------------------------------
@@ -45,22 +45,6 @@ _Q108_ORACLE = f"""
 _Q108_DONE: set[tuple[str, str]] = set()
 
 
-def _stream_root(spark, sf_dir: str, tag: str) -> str:
-    import glob
-    import hashlib
-    import shutil
-    import tempfile
-
-    key = hashlib.md5(
-        (spark.sparkContext.applicationId + "|" + sf_dir).encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"sparkextract_{tag}_{key}")
-    for stale in glob.glob(os.path.join(tempfile.gettempdir(), f"sparkextract_{tag}_*")):
-        if stale != root:
-            shutil.rmtree(stale, ignore_errors=True)
-    return root
-
-
 @register("q108_streaming_incremental", oracle=_Q108_ORACLE)
 def q108_streaming_incremental(spark, sf_dir):
     import shutil
@@ -68,7 +52,7 @@ def q108_streaming_incremental(spark, sf_dir):
     from sparkextract.queries.extraction import interleaved_docs
     from sparkextract.streaming.incremental import incremental_extract
 
-    root = _stream_root(spark, sf_dir, "q108")
+    root = session_root(spark, sf_dir, "q108")
     inp = os.path.join(root, "in")
     outp = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")

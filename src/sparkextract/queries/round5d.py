@@ -1368,11 +1368,11 @@ _Q145_DONE: set[tuple[str, str]] = set()
 def q145_streaming_stateful_dedup(spark, sf_dir):
     import shutil
 
-    from sparkextract.queries.round5 import _stream_root
+    from sparkextract.queries.base import session_root
     from sparkextract.spark.session import ensure_workers_can_import
     from sparkextract.streaming.stateful import streaming_dedup
 
-    root = _stream_root(spark, sf_dir, "q145")
+    root = session_root(spark, sf_dir, "q145")
     inp = os.path.join(root, "in")
     outp = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")

@@ -19,15 +19,19 @@ Scale notes:
 - the mega path shuffles only mega-doc items (~0.1% of docs), keyed by
   doc_id, with AQE skew handling on;
 - all Python crossings are Arrow-batched (no per-row Python, input_hint);
-- the small/mega split references the source twice, so the scan runs
-  twice (size(spans) is not pushable into parquet). This is deliberate:
-  persisting the input costs a full materialization and shuffling
-  everything through the mega path costs a full payload shuffle — both
-  worse than one extra columnar scan that discards 99.9% of rows early.
-  At ingest time the right fix is layout, not plan: store n_spans as a
-  top-level column (filter pushdown prunes row groups) or partition the
-  table by an is_mega flag (partition pruning skips the second scan's
-  data entirely).
+- the small/mega split references the source twice, so when it runs
+  the input is scanned twice (size(spans) is not pushable into parquet);
+  persisting the input or shuffling every doc through the mega path
+  would cost more. ``manifest.run_extraction_job`` therefore splits
+  only when the run's own numbers call for it: the threshold is the
+  mean input spans per scan task, from the per-bucket span sum/max the
+  job collects before its write anyway. A doc above it would hold one
+  task longer than a whole task's share, which salting pays for; when
+  no doc exceeds it the job passes ``skew_threshold=None`` and its data
+  write is one scan and no shuffle. Layout would make the split path's
+  second scan cheap too: store n_spans as a top-level column (filter
+  pushdown prunes row groups) or partition the table by an is_mega flag
+  (partition pruning skips the second scan's data entirely).
 """
 
 from __future__ import annotations

@@ -10,7 +10,9 @@ path.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -21,8 +23,12 @@ _SRC_DIR = os.path.dirname(_PKG_DIR)                                    # .../sr
 
 
 def build_pyfiles_zip(dest_dir: str | None = None) -> str:
-    """Zip the package for --py-files / addPyFile shipping."""
-    dest_dir = dest_dir or tempfile.mkdtemp(prefix="sparkextract_pyfiles_")
+    """Zip the package for --py-files / addPyFile shipping. Without a
+    ``dest_dir`` the zip goes to a fresh temp dir that is removed when
+    the interpreter exits."""
+    if dest_dir is None:
+        dest_dir = tempfile.mkdtemp(prefix="sparkextract_pyfiles_")
+        atexit.register(shutil.rmtree, dest_dir, ignore_errors=True)
     zip_path = os.path.join(dest_dir, "sparkextract.zip")
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(_PKG_DIR):

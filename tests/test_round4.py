@@ -158,6 +158,32 @@ def test_q95_crash_resume_split(spark):
     assert sum(r["doc_count"] for r in rows) == n_docs
 
 
+def test_session_root_reaps_only_aged_siblings(spark, tmp_path, monkeypatch):
+    """A sibling root of a live session survives; one untouched past the
+    reap age is removed; other tags are never touched."""
+    import tempfile
+    import time
+
+    from sparkextract.queries.base import SESSION_ROOT_REAP_AGE_S, session_root
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fresh = tmp_path / "sparkextract_q95_fresh"
+    aged = tmp_path / "sparkextract_q95_aged"
+    other = tmp_path / "sparkextract_q108_aged"
+    for d in (fresh, aged, other):
+        (d / "manifest").mkdir(parents=True)
+    past = time.time() - SESSION_ROOT_REAP_AGE_S - 60
+    for d in (aged, other):
+        os.utime(d, (past, past))
+
+    root = session_root(spark, SF_DIR, "q95")
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.path.basename(root).startswith("sparkextract_q95_")
+    assert fresh.exists() and other.exists()
+    assert not aged.exists()
+    assert session_root(spark, SF_DIR, "q95") == root
+
+
 def test_q96_block_dedup_first_writer_wins(spark):
     """A block's first occurrence (by doc_id, block_idx) is kept and every
     later occurrence dropped; a fully-unique doc keeps everything and its

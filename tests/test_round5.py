@@ -180,10 +180,10 @@ def test_ocr_media_deterministic(spark):
 def test_fail_after_buckets_is_bucket_id_rule(spark, tmp_path):
     """fail_after_buckets commits exactly the buckets with id < N —
     deterministic on the bucket ID, independent of which buckets happen
-    to be populated (round-4 ADVICE: the oracle derives run_seq from
-    this rule)."""
+    to be populated (here bucket 0 is empty) — and the resumed run
+    commits the rest: the rule q95's oracle derives run_seq from."""
     from sparkextract.schema import DOC_SCHEMA
-    from sparkextract.spark.manifest import read_manifest, run_extraction_job
+    from sparkextract.spark.manifest import done_buckets, run_extraction_job
 
     docs = spark.createDataFrame(
         [(f"d{i}", [{"kind": "text", "text": "x" * 120, "media_ref": None, "offset": 0}])
@@ -191,11 +191,12 @@ def test_fail_after_buckets_is_bucket_id_rule(spark, tmp_path):
         schema=DOC_SCHEMA,
     )
     root = str(tmp_path / "failrule")
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(7)) + 1  # buckets 1..7; 0 stays empty
     run_extraction_job(spark, docs, root, run_id="r1", num_buckets=8,
-                       fail_after_buckets=3)
-    m = read_manifest(spark, root).filter(F.col("status") == "done")
-    got = sorted(r["doc_id_bucket"] for r in m.collect())
-    assert all(b < 3 for b in got)
+                       fail_after_buckets=4, bucket_col=bucket)
+    run_extraction_job(spark, docs, root, run_id="r2", num_buckets=8, bucket_col=bucket)
+    winners = dict(done_buckets(spark, root).collect())
+    assert winners == {1: "r1", 2: "r1", 3: "r1", 4: "r2", 5: "r2", 6: "r2", 7: "r2"}
 
 
 def test_q110_semantic_dedup_ledger(spark):

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkextract.core.extract import extract_document
-from sparkextract.corpus import generate_corpus
+from sparkextract.corpus import MEGA_SPAN_MIN, generate_corpus
 from sparkextract.spark.datagen import corpus_df
 from sparkextract.spark.job import assemble_spans, extract_documents, extract_exploded
 from sparkextract.spark.manifest import read_extracted, run_extraction_job
@@ -167,3 +167,39 @@ def test_manifest_counts_match_output(spark, docs, tmp_path_factory):
     assert got["docs"] == sum(r["doc_count"] for r in rows.values())
     assert got["spans"] == sum(r["span_count"] for r in rows.values())
     assert got["tables"] == sum(r["table_count"] for r in rows.values())
+
+
+def _job_output(spark, docs, root):
+    """Committed output per doc, empty-output docs included."""
+    return _collect_spans(
+        assemble_spans(docs.select("doc_id").join(read_extracted(spark, root), "doc_id", "left"))
+    )
+
+
+def test_job_splits_only_task_dominating_doc(spark, docs, tmp_path):
+    """The split threshold is the run's mean input spans per scan task;
+    the corpus's one mega doc carries more than that, so it alone is
+    split, and every doc still equals the oracle."""
+    root = str(tmp_path / "split")
+    got = run_extraction_job(spark, docs, root, run_id="split", num_buckets=4)
+
+    n_spans = dict(docs.select("doc_id", F.coalesce(F.size("spans"), F.lit(0))).collect())
+    per_task = sum(n_spans.values()) // docs.rdd.getNumPartitions()
+    assert got["split_threshold"] == per_task
+    split = [d for d, n in n_spans.items() if n > per_task]
+    assert split == [d for d, n in n_spans.items() if n >= MEGA_SPAN_MIN] and len(split) == 1
+    assert _job_output(spark, docs, root) == _oracle()
+
+
+def test_job_without_dominating_doc_splits_nothing(spark, docs, tmp_path):
+    """No doc carries more input spans than the mean scan task: nothing
+    is split and every doc equals the oracle."""
+    small = docs.filter(F.coalesce(F.size("spans"), F.lit(0)) <= 64)
+    root = str(tmp_path / "whole")
+    got = run_extraction_job(spark, small, root, run_id="whole", num_buckets=4)
+
+    assert got["split_threshold"] is None
+    golden = _oracle()
+    want = {r["doc_id"]: golden[r["doc_id"]] for r in small.select("doc_id").collect()}
+    assert got["docs"] == len(want) == N_DOCS - 1
+    assert _job_output(spark, small, root) == want
