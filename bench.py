@@ -183,7 +183,9 @@ def _scaling_child(cores: int) -> dict:
     # every task slot still runs extraction work. Timed run = FULL corpus.
     from pyspark.sql import functions as F
 
-    extract_exploded(docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(4)) == 0)).count()
+    # whole-doc routing, as manifest.run_extraction_job runs it
+    warm = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(4)) == 0)
+    extract_exploded(warm, skew_threshold=None).count()
 
     # clear warmup garbage before timing: accumulated heap from the warmup
     # pass otherwise competes with the timed run's tasks for CPU (GC
@@ -192,7 +194,7 @@ def _scaling_child(cores: int) -> dict:
     time.sleep(2)
 
     t0 = time.time()
-    spans = extract_exploded(docs, parallelism=cores * 2).count()
+    spans = extract_exploded(docs, skew_threshold=None).count()
     elapsed = time.time() - t0
     spark.stop()
     return {

@@ -86,10 +86,17 @@ def checkpoint_memo(spark: SparkSession, sf_dir: str, tag: str, build):
     memoized per (session, input-content, tag). The build-time Spark job
     is the documented cost (PLANS.md notes it for q68/q71); the memo
     keeps it to once per session+input."""
+    return session_memo(spark, sf_dir, tag, lambda: build().localCheckpoint())
+
+
+def session_memo(spark: SparkSession, sf_dir: str, tag: str, build):
+    """``checkpoint_memo`` for a ``build()`` that already returns a
+    materialized frame (e.g. ``round3.label_propagation``'s checkpointed
+    labels), so the memo adds no second checkpoint job."""
     key = (spark.sparkContext.applicationId, input_token(sf_dir), sf_dir, tag)
     df = _CKPT_MEMO.get(key)
     if df is None:
-        df = build().localCheckpoint()
+        df = build()
         while len(_CKPT_MEMO) >= _CKPT_MEMO_CAP:
             _CKPT_MEMO.pop(next(iter(_CKPT_MEMO)))
         _CKPT_MEMO[key] = df

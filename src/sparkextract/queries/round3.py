@@ -283,10 +283,11 @@ def _dup_components(spark, sf_dir):
     # when q71 and q72 share one session+input (the panel view unions
     # both) the fixed point is memoized instead of recomputed; the memo
     # key's input token makes an in-session parquet rewrite recompute
-    # (regression-tested in test_round5.py)
-    from sparkextract.queries.base import checkpoint_memo
+    # (regression-tested in test_round5.py); label_propagation returns
+    # checkpointed labels, so the memo adds no checkpoint of its own
+    from sparkextract.queries.base import session_memo
 
-    return checkpoint_memo(
+    return session_memo(
         spark, sf_dir, "q71_components",
         lambda: label_propagation(q53_banded_lsh_near_dup(spark, sf_dir)),
     )

@@ -403,7 +403,7 @@ def _q94_base(spark, sf_dir):
 
 @register("q94_corpus_clean_pipeline", oracle=_q94_oracle())
 def q94_corpus_clean_pipeline(spark, sf_dir):
-    from sparkextract.queries.base import checkpoint_memo
+    from sparkextract.queries.base import checkpoint_memo, session_memo
     from sparkextract.queries.dedup2 import _simhash48_col, simhash_banded_pairs
     from sparkextract.queries.round3 import label_propagation
 
@@ -415,7 +415,7 @@ def q94_corpus_clean_pipeline(spark, sf_dir):
     sigs = checkpoint_memo(
         spark, sf_dir, "q94_sigs", lambda: _simhash48_col(good)
     )
-    labels = checkpoint_memo(
+    labels = session_memo(  # label_propagation's labels are checkpointed
         spark,
         sf_dir,
         "q94_labels",

@@ -22,14 +22,14 @@ Scale notes:
 - the small/mega split references the source twice, so when it runs
   the input is scanned twice (size(spans) is not pushable into parquet);
   persisting the input or shuffling every doc through the mega path
-  would cost more. ``manifest.run_extraction_job`` therefore splits
-  only when the run's own numbers call for it: the threshold is the
-  mean input spans per scan task, from the per-bucket span sum/max the
-  job collects before its write anyway. A doc above it would hold one
-  task longer than a whole task's share, which salting pays for; when
-  no doc exceeds it the job passes ``skew_threshold=None`` and its data
-  write is one scan and no shuffle. Layout would make the split path's
-  second scan cheap too: store n_spans as a top-level column (filter
+  would cost more. The split pays only when one doc holds a task longer
+  than its share, and no benchmark workload has such a doc: measured on
+  the default generator, whole-doc-only routing beat the split path in
+  docs/s. ``manifest.run_extraction_job`` therefore passes
+  ``skew_threshold=None``, and its data write is one scan with no
+  shuffle before the bucketing. Callers that want the split (q42, the
+  invariance tests) pass a threshold. Layout would make the split
+  path's second scan cheap: store n_spans as a top-level column (filter
   pushdown prunes row groups) or partition the table by an is_mega flag
   (partition pruning skips the second scan's data entirely).
 """

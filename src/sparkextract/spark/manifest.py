@@ -14,11 +14,11 @@ The resume probe is the reference's SHA-256 skip-if-ingested check
 per-document to per-bucket: a left-anti join against completed buckets
 (J2, SURVEY.md §2.3).
 
-A run commits in one pass. One small collect before the data write
-gets per-bucket doc counts and input-span sum/max, which both fill the
-manifest rows and route mega docs (see ``run_extraction_job``); the
-data write observes per-bucket span and table counts; the manifest rows
-are built on the driver and appended as local data.
+A run commits in one pass: the data write observes per-bucket span and
+table counts, one small collect adds per-bucket doc counts, and the
+manifest rows are built on the driver and appended as local data.
+After the write, that collect is the only job that reads the input,
+and it reads only ``doc_id``.
 
 On a real cluster the same API is backed by an Iceberg manifest table
 (``df.writeTo(...).append()`` is atomic per snapshot); the bucket math
@@ -110,29 +110,19 @@ def run_extraction_job(
     be non-empty), so an oracle can reproduce the run split exactly even
     if some low bucket were empty at a tiny scale factor.
 
-    Mega-doc routing is derived from the run's own input: the split
-    threshold is the mean input spans per scan task, and only docs above
-    it take the explode/salt/reassemble path. When no doc exceeds it
-    (no doc dominates a task), the data write is one input scan feeding
-    the whole-doc ``mapInPandas`` with no shuffle before the bucketing.
+    Every doc takes the whole-doc path (``skew_threshold=None``), so the
+    data write scans the input once and shuffles only for the bucketing.
+    The mega-doc split costs a second input scan plus a shuffle, and no
+    benchmark workload holds a doc for which salting pays that back (see
+    the ``spark.job`` docstring).
 
-    Returns run metrics (docs/spans/tables processed, the derived
-    ``split_threshold`` or ``None`` when nothing is split, wall seconds).
+    Returns run metrics (docs/spans/tables processed, wall seconds).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
 
     todo = filter_todo(docs, spark, root, num_buckets, bucket_col=bucket_col)
-    # doc counts come from `todo`, not the output, so buckets whose docs
-    # all extract to nothing still commit
-    n_span = F.coalesce(F.size("spans"), F.lit(0))
-    stats = todo.groupBy("doc_id_bucket").agg(
-        F.countDistinct("doc_id"), F.sum(n_span), F.max(n_span)
-    ).collect()
-    # getNumPartitions only plans the scan; it starts no job
-    per_task = sum(r[2] for r in stats) // max(docs.rdd.getNumPartitions(), 1)
-    split_threshold = per_task if any(r[3] > per_task for r in stats) else None
-    exploded = extract_exploded(todo.drop("doc_id_bucket"), skew_threshold=split_threshold)
+    exploded = extract_exploded(todo.drop("doc_id_bucket"), skew_threshold=None)
     out_bucket = bucket_expr(num_buckets) if bucket_col is None else bucket_col.cast("int")
     exploded = exploded.withColumn("bucket", out_bucket)
 
@@ -161,13 +151,16 @@ def run_extraction_job(
         .parquet(out_dir)
     )
 
+    # doc counts come from `todo`, not the output, so buckets whose docs
+    # all extract to nothing still commit
     metrics = obs.get
+    doc_counts = todo.groupBy("doc_id_bucket").agg(F.countDistinct("doc_id")).collect()
     wall_ms = int((time.time() - t0) * 1000)
     committed_at = datetime.now(timezone.utc)
     rows = [
         (run_id, k, "done", n_docs, metrics.get(f"sc_{k}", 0), metrics.get(f"tc_{k}", 0),
          wall_ms, committed_at)
-        for k, n_docs, _, _ in sorted(stats)
+        for k, n_docs in sorted(doc_counts)
         if fail_after_buckets is None or k < fail_after_buckets
     ]
     spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
@@ -179,7 +172,6 @@ def run_extraction_job(
         "docs": sum(r[3] for r in rows),
         "spans": sum(r[4] for r in rows),
         "tables": sum(r[5] for r in rows),
-        "split_threshold": split_threshold,
         "wall_s": time.time() - t0,
     }
 

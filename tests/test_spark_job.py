@@ -126,10 +126,21 @@ def test_assemble_roundtrip(spark, docs):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, exploded.collect()))
 
 
+def _sql_plans(spark, after_id=-1):
+    """(id, physical plan text) of the session's SQL executions after
+    ``after_id``, read from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = [execs.apply(i) for i in range(execs.size())]
+    return [(e.executionId(), e.physicalPlanDescription()) for e in out
+            if e.executionId() > after_id]
+
+
 def test_manifest_counts_match_output(spark, docs, tmp_path_factory):
     """Every committed manifest row's counts equal a groupBy over the input
     and the committed output, a bucket holding only empty-output docs
-    still commits, and the returned totals are the rows' sums."""
+    still commits, the returned totals are the rows' sums, and every
+    committed doc, the mega doc included, equals the oracle."""
     from sparkextract.schema import DOC_SCHEMA
     from sparkextract.spark.manifest import read_manifest
 
@@ -147,8 +158,10 @@ def test_manifest_counts_match_output(spark, docs, tmp_path_factory):
     bucket = F.when(F.col("doc_id").startswith("empty-"), F.lit(3)).otherwise(
         F.pmod(F.xxhash64("doc_id"), F.lit(3))
     )
+    before = max((i for i, _ in _sql_plans(spark)), default=-1)
     got = run_extraction_job(spark, corpus, root, run_id="counts", num_buckets=4,
                              bucket_col=bucket)
+    job_plans = [plan for _, plan in _sql_plans(spark, before)]
 
     rows = {r["doc_id_bucket"]: r for r in read_manifest(spark, root).collect()}
     want_docs = dict(corpus.groupBy(bucket.alias("b")).count().collect())
@@ -168,38 +181,15 @@ def test_manifest_counts_match_output(spark, docs, tmp_path_factory):
     assert got["spans"] == sum(r["span_count"] for r in rows.values())
     assert got["tables"] == sum(r["table_count"] for r in rows.values())
 
-
-def _job_output(spark, docs, root):
-    """Committed output per doc, empty-output docs included."""
-    return _collect_spans(
-        assemble_spans(docs.select("doc_id").join(read_extracted(spark, root), "doc_id", "left"))
+    # the job runs every doc whole, the mega doc too: its write has the
+    # whole-doc node and no finalize node
+    n_spans = docs.select(F.coalesce(F.size("spans"), F.lit(0))).collect()
+    assert max(r[0] for r in n_spans) >= MEGA_SPAN_MIN
+    assert any("MapInPandas" in plan for plan in job_plans)
+    assert not any("FlatMapGroupsInPandas" in plan for plan in job_plans)
+    committed = _collect_spans(
+        assemble_spans(corpus.select("doc_id").join(read_extracted(spark, root), "doc_id", "left"))
     )
-
-
-def test_job_splits_only_task_dominating_doc(spark, docs, tmp_path):
-    """The split threshold is the run's mean input spans per scan task;
-    the corpus's one mega doc carries more than that, so it alone is
-    split, and every doc still equals the oracle."""
-    root = str(tmp_path / "split")
-    got = run_extraction_job(spark, docs, root, run_id="split", num_buckets=4)
-
-    n_spans = dict(docs.select("doc_id", F.coalesce(F.size("spans"), F.lit(0))).collect())
-    per_task = sum(n_spans.values()) // docs.rdd.getNumPartitions()
-    assert got["split_threshold"] == per_task
-    split = [d for d, n in n_spans.items() if n > per_task]
-    assert split == [d for d, n in n_spans.items() if n >= MEGA_SPAN_MIN] and len(split) == 1
-    assert _job_output(spark, docs, root) == _oracle()
-
-
-def test_job_without_dominating_doc_splits_nothing(spark, docs, tmp_path):
-    """No doc carries more input spans than the mean scan task: nothing
-    is split and every doc equals the oracle."""
-    small = docs.filter(F.coalesce(F.size("spans"), F.lit(0)) <= 64)
-    root = str(tmp_path / "whole")
-    got = run_extraction_job(spark, small, root, run_id="whole", num_buckets=4)
-
-    assert got["split_threshold"] is None
-    golden = _oracle()
-    want = {r["doc_id"]: golden[r["doc_id"]] for r in small.select("doc_id").collect()}
-    assert got["docs"] == len(want) == N_DOCS - 1
-    assert _job_output(spark, small, root) == want
+    want = _oracle()
+    want.update({d: [] for d in ("empty-list", "empty-null", "empty-spans")})
+    assert committed == want
